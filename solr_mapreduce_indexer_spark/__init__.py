@@ -7,7 +7,7 @@ Spark DataFrames + Arrow-vectorized pandas UDFs:
 
     read transcripts -> dedup (conflict resolvers) -> murmur3 doc routing ->
     stable doc-id assignment -> tokenize -> posting-block build
-    (delta+varint, block-max metadata) -> tree merge -> manifest commit
+    (delta+FOR bit-packing, block-max metadata) -> tree merge -> manifest commit
     -> top-k BM25 query (block pruning, bounded heap)
 
 Design stance (SURVEY.md §7.0): DataFrame/Catalyst for everything relational;

@@ -32,7 +32,7 @@ import argparse
 import json
 import sys
 
-from .config import IndexConfig
+from .config import IndexConfig, decode_config
 
 
 def _add_spark_args(p: argparse.ArgumentParser) -> None:
@@ -90,8 +90,7 @@ def cmd_merge(args) -> int:
 
     spark = _spark(args, "smis-merge")
     m = mf.read_manifest(args.index_dir)
-    cfg = IndexConfig(**{k: (tuple(v) if k == "stopwords" else v)
-                         for k, v in m["config"].items()})
+    cfg = decode_config(m["config"])
     partitions, fanout, n_iters = cfg.plan_build_partitions()
     if n_iters == 0:
         print(json.dumps({"skipped": True, "reason": "R <= S, nothing to merge"}))

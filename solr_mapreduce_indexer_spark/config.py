@@ -35,12 +35,8 @@ class IndexConfig:
                                    # fast beats dense; the FINAL level (what
                                    # queries scan forever) always uses
                                    # `compression`
-    block_size: int = 128          # postings per compressed block (Lucene-style)
-    posting_codec: str = "for"     # posting value compression: "for" (bit-
-                                   # packed frame-of-reference; PForDelta's
-                                   # base scheme — 2.5-4x faster decode,
-                                   # smaller tf streams) or "varint" (LEB128).
-                                   # Payloads are tagged, so mixed indexes read fine.
+    block_size: int = 128          # postings per compressed block (Lucene-style);
+                                   # at most 65535, the FOR header's 2-byte count
     positions: bool = False        # store per-posting term positions (one
                                    # extra FOR stream per block) and serve
                                    # "PHRASE" queries — what the reference's
@@ -48,27 +44,12 @@ class IndexConfig:
                                    # (pom.xml:36-37). Off by default: ~1
                                    # byte/occurrence extra index size.
     doc_bits: int = 40             # doc_id = (shard_id << doc_bits) | local_idx
-    chunk_bits: int = 18           # retained for manifest compat; the fused
-                                   # per-shard index kernel (build.py
-                                   # _index_shard_mapper) bounds memory by
-                                   # micro-shard, so range-chunk salting of
-                                   # posting groups is no longer needed
 
     # --- BM25 (Lucene BM25Similarity defaults) ---
     k1: float = 1.2
     b: float = 0.75
 
-    # --- analysis ---
-    token_pattern: str = "[a-z0-9]+"   # lowercase + ascii word-break.
-                                       # MUST be dialect-portable: the same
-                                       # pattern runs under Python re (posting
-                                       # kernel), JVM regexp_extract_all
-                                       # (docmap doc_len), and DuckDB (oracle).
-                                       # validate_index cross-checks posting
-                                       # Σtf against docmap doc_len per doc,
-                                       # so a dialect divergence fails
-                                       # validation rather than silently
-                                       # skewing BM25 norms.
+    # --- analysis (token pattern: functions/analysis.TOKEN_PATTERN) ---
     min_token_len: int = 1
     stopwords: tuple[str, ...] = ()    # default: keep everything (Lucene
                                        # StandardAnalyzer w/o stopset)
@@ -80,10 +61,9 @@ class IndexConfig:
     def __post_init__(self) -> None:
         if self.shards < 1:
             raise ValueError("shards must be >= 1")
-        if self.block_size < 1:
-            raise ValueError("block_size must be >= 1")
-        if self.chunk_bits < 1 or self.chunk_bits > self.doc_bits:
-            raise ValueError("chunk_bits must be in [1, doc_bits]")
+        if not 1 <= self.block_size <= 0xFFFF:
+            # the posting kernel writes each block's count in 2 bytes
+            raise ValueError("block_size must be in [1, 65535]")
 
     # Reference invariant: R rounded up to S * F^N so the merge tree is uniform
     # (IndexTool.java:193-210). Returns (R, F, iterations).
@@ -103,4 +83,21 @@ class IndexConfig:
         return cur, f, n
 
 
-DEFAULT_CONFIG = IndexConfig()
+# manifest config keys of fields this version no longer has
+_RETIRED_KEYS = ("posting_codec", "chunk_bits", "token_pattern")
+
+
+def decode_config(raw: dict) -> IndexConfig:
+    """IndexConfig from a manifest's ``config`` object (JSON lists back to
+    tuples). Older manifests carry three retired keys, which are dropped:
+    posting_codec (every payload tag it could write still decodes),
+    chunk_bits (never read), and token_pattern — accepted only when it is
+    the one analyzer this version tokenizes with."""
+    from .functions.analysis import TOKEN_PATTERN
+    pattern = raw.get("token_pattern", TOKEN_PATTERN)
+    if pattern != TOKEN_PATTERN:
+        raise ValueError(f"index was built with token_pattern={pattern!r}; "
+                         f"only {TOKEN_PATTERN!r} is supported")
+    return IndexConfig(**{k: (tuple(v) if k == "stopwords" else v)
+                          for k, v in raw.items()
+                          if k not in _RETIRED_KEYS})

@@ -22,11 +22,19 @@ from pyspark.sql import functions as F
 
 from ..config import IndexConfig
 
+# lowercase + ASCII word-break. MUST be dialect-portable: the same pattern
+# runs under JVM regexp_extract_all (docmap doc_len), Python re (oracles) and
+# DuckDB (SQL oracle), and index/fastbuild.py's byte tokenizer implements it
+# as a byte-class mask. validate_index cross-checks posting Σtf against
+# docmap doc_len per doc, so a divergence fails validation rather than
+# silently skewing BM25 norms.
+TOKEN_PATTERN = "[a-z0-9]+"
+
 
 def tokenize_col(text: Column | str, cfg: IndexConfig) -> Column:
     """text → array<string> of analyzed tokens (JVM-side)."""
     col = F.col(text) if isinstance(text, str) else text
-    toks = F.regexp_extract_all(F.lower(col), F.lit(cfg.token_pattern), 0)
+    toks = F.regexp_extract_all(F.lower(col), F.lit(TOKEN_PATTERN), 0)
     if cfg.min_token_len > 1:
         toks = F.filter(toks, lambda t: F.length(t) >= cfg.min_token_len)
     if cfg.stopwords:
@@ -35,14 +43,9 @@ def tokenize_col(text: Column | str, cfg: IndexConfig) -> Column:
     return toks
 
 
-def doc_len_col(text: Column | str, cfg: IndexConfig) -> Column:
-    """BM25 document length = token count."""
-    return F.size(tokenize_col(text, cfg))
-
-
 def tokenize_pandas(texts: pd.Series, cfg: IndexConfig) -> pd.Series:
     """Oracle twin of tokenize_col (pure pandas/re, no Spark)."""
-    pat = re.compile(cfg.token_pattern)
+    pat = re.compile(TOKEN_PATTERN)
     stop = set(cfg.stopwords)
 
     def tok(t: str) -> list[str]:
@@ -60,7 +63,7 @@ def tokenize_pandas(texts: pd.Series, cfg: IndexConfig) -> pd.Series:
 
 def tokenize_sql(expr: str, cfg: IndexConfig) -> str:
     """DuckDB-compatible SQL expression producing the same token array."""
-    base = f"regexp_extract_all(lower({expr}), '{cfg.token_pattern}')"
+    base = f"regexp_extract_all(lower({expr}), '{TOKEN_PATTERN}')"
     if cfg.min_token_len > 1:
         base = f"list_filter({base}, t -> length(t) >= {cfg.min_token_len})"
     if cfg.stopwords:

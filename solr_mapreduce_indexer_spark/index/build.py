@@ -30,7 +30,6 @@ remains globally consistent with (micro_shard, conv_id, turn_idx).
 from __future__ import annotations
 
 import os
-from dataclasses import asdict
 
 import numpy as np
 import pandas as pd
@@ -43,7 +42,6 @@ from ..functions.analysis import tokenize_col
 from ..functions.routing import routing_pandas_udf
 from ..operators.dedup import RESOLVERS
 from . import manifest as mf
-from .codec import encode_blocks
 
 POSTINGS_SCHEMA = ("shard_id int, term string, first_doc long, last_doc long, "
                    "n int, max_tf int, sum_tf long, min_dl int, "
@@ -126,104 +124,35 @@ def docmap_cols(docs: DataFrame, cfg: IndexConfig) -> DataFrame:
             .drop("text"))
 
 
-def term_doc_tf(docs: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """Exploded (shard_id, doc_id, doc_len, term, tf) table — the relational
-    core of the index build (reference analog: what the EmbeddedSolrServer's
-    Lucene writer derives internally per reducer, SolrRecordWriter.java:258-284).
-    Tokenization streams directly into the explode + partial agg."""
-    toks = docs.select("shard_id", "doc_id",
-                       tokenize_col("text", cfg).alias("tokens"))
-    return (toks
-            .select("shard_id", "doc_id", F.size("tokens").alias("doc_len"),
-                    F.explode("tokens").alias("term"))
-            .groupBy("shard_id", "doc_id", "doc_len", "term")
-            .agg(F.count(F.lit(1)).cast("int").alias("tf")))
-
-
 def _index_shard_mapper(cfg: IndexConfig, avgdl: float):
-    """mapInPandas kernel: a partition of (shard_id, doc_id, doc_len,
-    tokens[]) rows, sorted by (shard_id, doc_id), → posting-block rows.
+    """mapInPandas kernel: a partition of (shard_id, doc_id, text) rows,
+    sorted by (shard_id, doc_id), → posting-block rows.
 
     This is the engine's "reducer": each task builds the complete inverted
     index of the micro-shards it owns, exactly like one reference reducer
     hosting an EmbeddedSolrServer builds one micro-shard's Lucene index
     (SolrReducer.java:40-47, SolrRecordWriter.java:258-284). Fusing
-    tf-counting, posting-list grouping, and block encoding into one pass
-    means the whole posting build costs ONE shuffle (by shard) instead of
-    three (tf agg, posting collect_list, shard repartition) — at 10^12 rows
-    the removed shuffles are the dominant cost.
-
-    Vectorization: tokens are factorized to int codes (hash-based), postings
-    derived by one lexsort + run-length pass; memory is bounded by one
-    micro-shard's tokens (the same contract the reference's 16 GB reducers
-    have, MorphlineEnabledIndexerTool.java:177-179 — size R accordingly)."""
-    block_size, k1, b = cfg.block_size, cfg.k1, cfg.b
-    codec = cfg.posting_codec
-
-    def build_shard(shard: int, doc_ids: list,
-                    token_arrays: list) -> pd.DataFrame:
-        lens = np.fromiter((len(t) for t in token_arrays), np.int64,
-                           len(token_arrays))
-        dls = lens  # BM25 doc length == token count, derived here
-        if lens.sum() == 0:
-            return pd.DataFrame(columns=POSTINGS_COLS)
-        all_toks = np.concatenate([np.asarray(t, dtype=object)
-                                   for t in token_arrays])
-        codes, terms = pd.factorize(all_toks)
-        doc_rep = np.repeat(np.asarray(doc_ids, np.int64), lens)
-        dl_rep = np.repeat(np.asarray(dls, np.int64), lens)
-        order = np.lexsort((doc_rep, codes))
-        c, d, dl = codes[order], doc_rep[order], dl_rep[order]
-        # run-length over (term code, doc) → tf per posting
-        new = np.empty(len(c), dtype=bool)
-        new[0] = True
-        new[1:] = (c[1:] != c[:-1]) | (d[1:] != d[:-1])
-        starts = np.flatnonzero(new)
-        tf = np.diff(np.append(starts, len(c)))
-        cu, du, dlu = c[starts], d[starts], dl[starts]
-        # term boundaries over the posting runs
-        tnew = np.empty(len(cu), dtype=bool)
-        tnew[0] = True
-        tnew[1:] = cu[1:] != cu[:-1]
-        tstarts = np.flatnonzero(tnew)
-        tends = np.append(tstarts[1:], len(cu))
-        out: list[tuple] = []
-        for s, e in zip(tstarts, tends):
-            term = terms[cu[s]]
-            for blk in encode_blocks(du[s:e], tf[s:e], dlu[s:e], avgdl,
-                                     block_size=block_size, k1=k1, b=b,
-                                     codec=codec):
-                out.append((shard, term, blk["first_doc"], blk["last_doc"],
-                            blk["n"], blk["max_tf"], blk["sum_tf"],
-                            blk["min_dl"], blk["max_tfnorm"],
-                            blk["doc_bytes"], blk["tf_bytes"],
-                            blk["len_bytes"], b""))
-        return pd.DataFrame(out, columns=POSTINGS_COLS)
-
-    from ..functions.analysis import tokenize_pandas
-    from .fastbuild import build_shard_fast, supports_fast_path
-
-    fast = supports_fast_path(cfg)
-    if cfg.positions and not fast:
-        raise ValueError("positions=True requires the vectorized kernel "
-                         "(posting_codec='for' and the default token "
-                         "pattern)")
+    tokenizing, tf-counting, posting-list grouping, and block encoding into
+    one pass (fastbuild.build_shard_fast) means the whole posting build
+    costs ONE shuffle (by shard) instead of three (tf agg, posting
+    collect_list, shard repartition) — at 10^12 rows the removed shuffles
+    are the dominant cost. Memory is bounded by one micro-shard's tokens
+    (the same contract the reference's 16 GB reducers have,
+    MorphlineEnabledIndexerTool.java:177-179 — size R accordingly)."""
+    from .fastbuild import build_shard_fast
 
     def finish(shard: int, doc_ids: np.ndarray, texts) -> pd.DataFrame:
         # input-contract guard (cheap, vectorized): each micro-shard's rows
-        # must arrive in strictly increasing doc_id order — build_postings'
-        # pre_partitioned path relies on the upstream window's sort instead
-        # of re-sorting, so a violated contract must fail loudly here, not
-        # silently emit mis-ordered posting blocks
+        # must arrive in strictly increasing doc_id order — build_postings
+        # relies on the upstream window's sort instead of re-sorting, so a
+        # violated contract must fail loudly here, not silently emit
+        # mis-ordered posting blocks
         if len(doc_ids) > 1 and not bool(np.all(np.diff(doc_ids) > 0)):
             raise ValueError(
                 f"micro-shard {shard}: doc_ids not strictly increasing — "
                 "build_postings input must be sorted by (shard_id, doc_id)")
-        if fast:
-            return build_shard_fast(shard, doc_ids, texts, cfg, avgdl,
-                                    POSTINGS_COLS)
-        toks = tokenize_pandas(pd.Series(texts), cfg).to_numpy()
-        return build_shard(shard, list(doc_ids), list(toks))
+        return build_shard_fast(shard, doc_ids, texts, cfg, avgdl,
+                                POSTINGS_COLS)
 
     def index_partition(batches):
         from .codec import tune_allocator
@@ -232,9 +161,9 @@ def _index_shard_mapper(cfg: IndexConfig, avgdl: float):
         # over Arrow is ~2.5x fewer bytes than shipping token arrays, and
         # the virtualized socket path is the bottleneck. Rows arrive sorted
         # by (shard_id, doc_id), so micro-shards are contiguous runs —
-        # detected vectorized, never a per-row Python loop. The fast kernel
+        # detected vectorized, never a per-row Python loop. The kernel
         # (fastbuild.py) tokenizes/factorizes/encodes with zero per-token
-        # Python objects; non-default analysis configs use the generic path.
+        # Python objects.
         cur = None
         id_chunks: list[np.ndarray] = []
         txt_chunks: list[np.ndarray] = []
@@ -263,30 +192,25 @@ def _index_shard_mapper(cfg: IndexConfig, avgdl: float):
 
 
 def build_postings(docs: DataFrame, cfg: IndexConfig, avgdl: float,
-                   partitions: int, pre_partitioned: bool = False) -> DataFrame:
+                   partitions: int) -> DataFrame:
     """docs (shard_id, doc_id, …, text) → compressed posting-block rows.
 
-    Co-locate each micro-shard's rows, sort by doc id, ship raw text over
-    Arrow, and build each shard's index in a single fused kernel (tokenize →
-    tf → posting lists → blocks; see _index_shard_mapper).
+    Ships raw text over Arrow and builds each micro-shard's index in a
+    single fused kernel (tokenize → tf → posting lists → blocks; see
+    _index_shard_mapper).
 
-    pre_partitioned=True skips BOTH the shuffle and the sort: the caller
-    guarantees docs are prepare_docs output — hash-clustered by shard_id
-    (its doc-id window established exactly that clustering, so
-    repartitioning again re-shuffled every text byte for an identical
-    distribution) AND already ordered (shard_id, conv_id, turn_idx) within
-    partitions by the same window's sort, which is doc_id order by
-    construction. SortExec can't prove the derived doc_id preserves that
-    ordering, so the explicit sort here re-sorted already-sorted data — one
-    wasted full in-memory pass per build at scale. The kernel guards the
-    contract: a non-monotonic doc_id run fails loudly (see
-    _index_shard_mapper) rather than silently mis-building postings."""
-    src = docs.select("shard_id", "doc_id", "text")
-    if not pre_partitioned:
-        src = (src.repartition(partitions, "shard_id")
-                  .sortWithinPartitions("shard_id", "doc_id"))
-    return src.mapInPandas(_index_shard_mapper(cfg, avgdl),
-                           schema=POSTINGS_SCHEMA)
+    No shuffle and no sort: docs must be prepare_docs output —
+    hash-clustered by shard_id (its doc-id window established exactly that
+    clustering) AND ordered (shard_id, conv_id, turn_idx) within partitions
+    by the same window's sort, which is doc_id order by construction.
+    SortExec can't prove the derived doc_id preserves that ordering, so an
+    explicit sort here would re-sort already-sorted data. The kernel guards
+    the contract: a non-monotonic doc_id run fails loudly (see
+    _index_shard_mapper) rather than silently mis-building postings.
+    `partitions` is the micro-shard count R the docs were clustered by."""
+    return (docs.select("shard_id", "doc_id", "text")
+                .mapInPandas(_index_shard_mapper(cfg, avgdl),
+                             schema=POSTINGS_SCHEMA))
 
 
 def segment_metrics(spark: SparkSession, segments_path: str) -> list[dict]:
@@ -424,8 +348,7 @@ def build_index(spark: SparkSession, df: DataFrame, cfg: IndexConfig,
     # --- phase: level-0 posting segments ------------------------------------
     if not (resume and mf.read_checkpoint(index_dir, "level_0")):
         t0 = time.time()
-        postings = build_postings(get_docs(), cfg, stats["avgdl"], partitions,
-                                  pre_partitioned=True)
+        postings = build_postings(get_docs(), cfg, stats["avgdl"], partitions)
         # level 0 is rewritten by the merge tree when one exists — write it
         # with the cheap codec then; only a merge-less build serves from it
         l0_codec = (cfg.intermediate_compression if n_iters > 0

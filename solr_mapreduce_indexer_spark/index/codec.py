@@ -1,4 +1,4 @@
-"""Posting-block codec: delta + varint/FOR compression with block-max metadata.
+"""Posting-block codec: delta + FOR bit-packing with block-max metadata.
 
 The reference delegates posting compression to shaded Lucene 7.7.2 (delta-encoded
 doc IDs + term frequencies in compressed blocks). We re-derive the same layout
@@ -6,15 +6,12 @@ natively: fixed-size blocks of (doc_id delta, tf) pairs, each block carrying
 (first_doc, last_doc, n, max_tf, max_tfnorm) so the query side can do
 block-max pruning (Ding & Suel, SIGIR'11) before decoding.
 
-Two value codecs, self-describing via a 1-byte payload tag:
-
-* varint — LEB128, byte-aligned (tag 0)
-* FOR — frame-of-reference fixed-width bit packing (tag 1), the base scheme
-  of the PForDelta family (Zukowski et al., ICDE'06) without exception
-  patching: blocks are 128 postings, short enough that one outlier widening
-  the whole block costs less than patch bookkeeping. Measured on this
-  sandbox: 2.5-4x faster decode than varint and ~2.5x smaller tf streams —
-  FOR is the default (IndexConfig.posting_codec).
+One value writer: FOR — frame-of-reference fixed-width bit packing, the base
+scheme of the PForDelta family (Zukowski et al., ICDE'06) without exception
+patching: blocks are 128 postings, short enough that one outlier widening the
+whole block costs less than patch bookkeeping. Payloads are self-describing
+via a 1-byte tag (see ``_TAG_*``); the reader also keeps the retired LEB128
+varint tag, so indexes written with it still decode.
 
 All kernels are numpy-vectorized — inner loops are over byte/bit position,
 never over values.
@@ -55,33 +52,6 @@ def tune_allocator() -> None:
         pass
 
 _U64 = np.uint64
-_SEVEN = _U64(7)
-_LOW7 = _U64(0x7F)
-
-
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128 varint-encode an array of non-negative ints (vectorized)."""
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    n = len(v)
-    if n == 0:
-        return b""
-    nbytes = np.ones(n, dtype=np.int64)
-    tmp = v >> _SEVEN
-    while tmp.any():
-        nbytes += (tmp > 0)
-        tmp = tmp >> _SEVEN
-    total = int(nbytes.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    starts = np.zeros(n, dtype=np.int64)
-    np.cumsum(nbytes[:-1], out=starts[1:])
-    cur = v.copy()
-    for i in range(int(nbytes.max())):
-        sel = nbytes > i
-        byte = (cur[sel] & _LOW7).astype(np.uint8)
-        more = (nbytes[sel] > i + 1).astype(np.uint8)
-        out[starts[sel] + i] = byte | (more << 7)
-        cur[sel] = cur[sel] >> _SEVEN
-    return out.tobytes()
 
 
 def varint_decode(buf: bytes | np.ndarray) -> np.ndarray:
@@ -102,64 +72,64 @@ def varint_decode(buf: bytes | np.ndarray) -> np.ndarray:
     return vals
 
 
-def for_encode(values: np.ndarray) -> bytes:
-    """FOR bit-packing: header (nbits:1B, count:2B LE) + packed bits.
-    Vectorized: one shift-matrix + packbits, no per-value loop."""
+def for_encode(values: np.ndarray, count_bytes: int = 2) -> bytes:
+    """FOR bit-packing: header (nbits:1B, count: count_bytes LE) + packed
+    bits. Vectorized: one shift-matrix + packbits, no per-value loop."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
     n = len(v)
-    if n == 0:
-        return b"\x01\x00\x00"
-    nbits = max(int(v.max()).bit_length(), 1)
+    nbits = max(int(v.max()).bit_length(), 1) if n else 1
     bits = ((v[:, None] >> np.arange(nbits, dtype=np.uint64))
             & np.uint64(1)).astype(np.uint8)
-    return bytes([nbits]) + n.to_bytes(2, "little") \
+    return bytes([nbits]) + n.to_bytes(count_bytes, "little") \
         + np.packbits(bits.ravel()).tobytes()
 
 
-def for_decode(buf: bytes | np.ndarray) -> np.ndarray:
-    b = np.frombuffer(buf, dtype=np.uint8) if isinstance(
-        buf, (bytes, bytearray, memoryview)) else buf
-    nbits = int(b[0])
-    n = int(b[1]) | (int(b[2]) << 8)
+def for_decode(buf: bytes | memoryview, count_bytes: int = 2) -> np.ndarray:
+    """Inverse of for_encode with the same count width. The header is
+    parsed from the raw buffer, not a numpy view: numpy scalar access is a
+    measurable share of one small block's decode on the query path."""
+    mv = memoryview(buf)
+    hdr = 1 + count_bytes
+    nbits = mv[0]
+    n = int.from_bytes(mv[1:hdr], "little")
     if n == 0:
         return np.empty(0, dtype=np.uint64)
-    bits = np.unpackbits(b[3:], count=n * nbits)
+    if nbits < 1 or nbits > 64 or (n * nbits + 7) // 8 > len(mv) - hdr:
+        # corrupt header (e.g. a flipped tag byte): fail loudly instead
+        # of allocating a bogus-count buffer
+        raise ValueError("corrupt FOR payload header")
+    bits = np.unpackbits(np.frombuffer(mv[hdr:], dtype=np.uint8),
+                         count=n * nbits)
     m = bits.reshape(n, nbits).astype(np.uint64)
     return (m << np.arange(nbits, dtype=np.uint64)).sum(axis=1)
 
 
-# payload tag (first byte) → codec; payloads are self-describing so an index
-# written with either codec reads back with the same decode_block.
-# Tag 2 = FOR with a 4-byte count: position streams hold up to
-# block_size × tf values, which can exceed the 2-byte count of tag 1.
+# payload tag (first byte) → codec; payloads are self-describing, so
+# decode_block reads every tag. Tag 1 = FOR with a 2-byte count (doc, tf
+# and length streams of a block); tag 2 = FOR with a 4-byte count (position
+# streams hold up to block_size × tf values, and any longer value stream).
+# Tag 0 = LEB128 varint: no longer written, still decoded, so indexes built
+# with the retired varint codec stay readable.
 _TAG_VARINT, _TAG_FOR, _TAG_FOR32 = 0, 1, 2
+_COUNT_BYTES = {_TAG_FOR: 2, _TAG_FOR32: 4}
 
 
-def encode_values(values: np.ndarray, codec: str = "for") -> bytes:
-    """Tagged value encoding. count > 65535 falls back to varint (the FOR
-    header's count field is 2 bytes; block_size never approaches this)."""
-    if codec == "for" and len(values) <= 0xFFFF:
-        return bytes([_TAG_FOR]) + for_encode(values)
-    return bytes([_TAG_VARINT]) + varint_encode(values)
+def encode_values(values: np.ndarray) -> bytes:
+    """Tagged FOR encoding: tag 1, or tag 2 once the count outgrows the
+    2-byte field (block_size never approaches this)."""
+    tag = _TAG_FOR if len(values) <= 0xFFFF else _TAG_FOR32
+    return bytes([tag]) + for_encode(values, _COUNT_BYTES[tag])
 
 
 def decode_values(buf: bytes) -> np.ndarray:
-    if buf[0] == _TAG_FOR:
+    tag = buf[0]
+    if tag == _TAG_FOR:
         return for_decode(memoryview(buf)[1:])
-    if buf[0] == _TAG_FOR32:
-        b = np.frombuffer(memoryview(buf)[1:], dtype=np.uint8)
-        nbits = int(b[0])
-        n = int.from_bytes(bytes(b[1:5]), "little")
-        if n == 0:
-            return np.empty(0, dtype=np.uint64)
-        if nbits < 1 or nbits > 64 or (n * nbits + 7) // 8 > len(b) - 5:
-            # corrupt header (e.g. a flipped tag byte): fail loudly instead
-            # of allocating a bogus-count buffer
-            raise ValueError("corrupt FOR32 payload header")
-        bits = np.unpackbits(b[5:], count=n * nbits)
-        m = bits.reshape(n, nbits).astype(np.uint64)
-        return (m << np.arange(nbits, dtype=np.uint64)).sum(axis=1)
-    return varint_decode(memoryview(buf)[1:])
+    if tag == _TAG_FOR32:
+        return for_decode(memoryview(buf)[1:], _COUNT_BYTES[_TAG_FOR32])
+    if tag == _TAG_VARINT:
+        return varint_decode(memoryview(buf)[1:])
+    raise ValueError(f"unknown payload tag {tag}")
 
 
 def encode_positions(pos: np.ndarray, tfs: np.ndarray) -> bytes:
@@ -170,17 +140,10 @@ def encode_positions(pos: np.ndarray, tfs: np.ndarray) -> bytes:
     rebasing (tree merge, merge-indexes) untouched."""
     pos = np.ascontiguousarray(pos, dtype=np.int64)
     tfs = np.ascontiguousarray(tfs, dtype=np.int64)
-    if len(pos) == 0:
-        return b"\x02\x01\x00\x00\x00\x00"
     d = np.diff(pos, prepend=np.int64(0))
     starts = np.cumsum(tfs) - tfs
     d[starts] = pos[starts]
-    v = d.astype(np.uint64)
-    nbits = max(int(v.max()).bit_length(), 1)
-    bits = ((v[:, None] >> np.arange(nbits, dtype=np.uint64))
-            & np.uint64(1)).astype(np.uint8)
-    return (bytes([_TAG_FOR32, nbits]) + len(v).to_bytes(4, "little")
-            + np.packbits(bits.ravel()).tobytes())
+    return bytes([_TAG_FOR32]) + for_encode(d, _COUNT_BYTES[_TAG_FOR32])
 
 
 def decode_positions(buf: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -200,12 +163,12 @@ def decode_positions(buf: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarra
     return cs - base, starts
 
 
-def encode_doc_deltas(doc_ids: np.ndarray, codec: str = "for") -> bytes:
+def encode_doc_deltas(doc_ids: np.ndarray) -> bytes:
     """Delta-encode a strictly-ascending doc-id array (first delta is 0,
     base doc id lives in block metadata as ``first_doc``)."""
     d = np.asarray(doc_ids, dtype=np.int64)
     deltas = np.diff(d, prepend=d[0] if len(d) else 0)
-    return encode_values(deltas, codec)
+    return encode_values(deltas)
 
 
 def decode_doc_deltas(buf: bytes, first_doc: int) -> np.ndarray:
@@ -227,8 +190,7 @@ def bm25_tfnorm(tf: np.ndarray, doc_len: np.ndarray, avgdl: float,
 
 def encode_blocks(doc_ids: np.ndarray, tfs: np.ndarray, doc_lens: np.ndarray,
                   avgdl: float, block_size: int = 128,
-                  k1: float = 1.2, b: float = 0.75,
-                  codec: str = "for") -> list[dict]:
+                  k1: float = 1.2, b: float = 0.75) -> list[dict]:
     """Split one term's sorted postings into fixed-size compressed blocks.
 
     Returns a list of dict rows:
@@ -253,9 +215,9 @@ def encode_blocks(doc_ids: np.ndarray, tfs: np.ndarray, doc_lens: np.ndarray,
             "first_doc": int(d[0]),
             "last_doc": int(d[-1]),
             "n": int(e - s),
-            "doc_bytes": encode_doc_deltas(d, codec),
-            "tf_bytes": encode_values(t, codec),
-            "len_bytes": encode_values(dl, codec),
+            "doc_bytes": encode_doc_deltas(d),
+            "tf_bytes": encode_values(t),
+            "len_bytes": encode_values(dl),
             "max_tf": int(t.max()),
             # sum_tf/min_dl let df/cf derive from block METADATA alone
             # (term_stats without re-exploding tokens) and give an
@@ -270,8 +232,8 @@ def encode_blocks(doc_ids: np.ndarray, tfs: np.ndarray, doc_lens: np.ndarray,
 def decode_block(doc_bytes: bytes, tf_bytes: bytes, len_bytes: bytes,
                  first_doc: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Inverse of encode_blocks for one block → (doc_ids, tfs, doc_lens).
-    Payloads are self-describing (codec tag byte), so blocks written with
-    either codec — even mixed within one index — decode uniformly."""
+    Payloads are self-describing (codec tag byte), so blocks written under
+    any tag — even mixed within one index — decode uniformly."""
     docs = decode_doc_deltas(doc_bytes, first_doc)
     tfs = decode_values(tf_bytes).astype(np.int64)
     lens = decode_values(len_bytes).astype(np.int64)

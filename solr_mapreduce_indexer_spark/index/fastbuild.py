@@ -1,39 +1,31 @@
 """Vectorized level-0 posting-build kernel (the engine's hot path).
 
-The generic kernel in build.py tokenizes with per-doc ``re.findall`` (one
-Python string object per token), factorizes object arrays, and calls
-``encode_blocks`` once per term (~20k tiny numpy calls per micro-shard).
-At 42 tokens/turn that allocates tens of millions of Python objects per
-task — allocator and memory-bandwidth churn that both costs absolute time
-and anti-scales on shared memory controllers (round-2 measurement: level-0
-build scaled at 0.43 of 2→8 cores while the pure-JVM docmap phase hit 0.85
-in the same run).
-
-This module re-derives the same postings with zero per-token Python objects:
+Builds one micro-shard's postings with zero per-token Python objects (a
+per-doc ``re.findall`` + per-term encode allocates tens of millions of
+Python objects per task at 42 tokens/turn — allocator and memory-bandwidth
+churn that both costs absolute time and anti-scales on shared memory
+controllers):
 
   1. tokenize at the BYTE level: lowercase+utf-8 encode each doc (two C
      calls per doc), join with a separator byte, and find [a-z0-9]+ runs as
      boolean-mask transitions in one numpy pass — exactly the semantics of
-     the configured ``[a-z0-9]+`` pattern, because multi-byte UTF-8 units
-     have the high bit set and can never fall inside the ASCII class;
+     analysis.TOKEN_PATTERN, because multi-byte UTF-8 units have the high
+     bit set and can never fall inside the ASCII class;
   2. factorize WITHOUT strings: pad token byte-spans into an (n_tokens ×
-     maxlen) uint8 matrix, view rows as fixed-width void scalars, and
-     ``np.unique(return_inverse)`` — only the ~vocab-sized unique terms are
-     ever materialized as Python strings;
-  3. run-length postings exactly as the generic kernel (lexsort by term
-     code then doc);
+     maxlen) uint8 matrix, view rows as big-endian uint64 words, and unique
+     on integer keys — only the ~vocab-sized unique terms are ever
+     materialized as Python strings;
+  3. run-length postings (lexsort by term code then doc);
   4. encode ALL blocks of all terms at once (``encode_blocks_bulk``):
      per-block reductions via ``*.reduceat``, FOR bit-packing grouped by
      bit width with one scatter + ``np.packbits`` per width group. The byte
-     layout is bit-identical to codec.for_encode, so indexes written by
-     either kernel are interchangeable and decode_block needs no changes.
+     layout is bit-identical to codec.encode_values / encode_positions, so
+     decode_block and the compaction rewrite (codec.encode_blocks) share it.
 
-Used automatically by build.py's _index_shard_mapper when the config allows
-(posting_codec='for' and the default ASCII token pattern); any other config
-falls back to the generic kernel. Reference analog: this is the inner loop
-of one reducer's EmbeddedSolrServer (SolrRecordWriter.java:258-284) — the
-reference delegates it to Lucene's C-tuned indexing chain, we delegate it
-to numpy.
+build.py's _index_shard_mapper calls it once per micro-shard. Reference
+analog: this is the inner loop of one reducer's EmbeddedSolrServer
+(SolrRecordWriter.java:258-284) — the reference delegates it to Lucene's
+C-tuned indexing chain, we delegate it to numpy.
 """
 
 from __future__ import annotations
@@ -42,9 +34,7 @@ import numpy as np
 import pandas as pd
 
 from ..config import IndexConfig
-from .codec import bm25_tfnorm
-
-_TAG_FOR = 1
+from .codec import _COUNT_BYTES, _TAG_FOR, _TAG_FOR32, bm25_tfnorm
 
 # byte-class lookup for the default token pattern [a-z0-9]+ over lowercased
 # utf-8 text: True for bytes that are inside a token
@@ -56,10 +46,6 @@ _ALNUM[ord("0"):ord("9") + 1] = True
 # the padded matrix, bounding matrix memory at n_tokens * _MAXPAD bytes even
 # if the corpus contains megabyte-long alnum runs
 _MAXPAD = 64
-
-
-def supports_fast_path(cfg: IndexConfig) -> bool:
-    return cfg.posting_codec == "for" and cfg.token_pattern == "[a-z0-9]+"
 
 
 def _bit_lengths(v: np.ndarray) -> np.ndarray:
@@ -123,7 +109,7 @@ def encode_blocks_bulk(doc_ids: np.ndarray, tfs: np.ndarray,
     (term_code, doc_id). Returns columnar arrays: block_term (code),
     first_doc, last_doc, n, max_tf, sum_tf, min_dl, max_tfnorm, and the
     three payload (buffer, offsets) pairs; byte layout identical to
-    codec.encode_blocks with codec='for'.
+    codec.encode_blocks.
 
     With positions enabled, `pos_sorted` holds the in-doc position of every
     TOKEN in the same (term, doc, appearance) order the postings were run-
@@ -183,23 +169,16 @@ def encode_blocks_bulk(doc_ids: np.ndarray, tfs: np.ndarray,
 
 
 def _assemble_payload_bytes(pay: np.ndarray, off: np.ndarray,
-                            nbits: np.ndarray, lens: np.ndarray) -> list[bytes]:
-    """Per-block tagged byte strings: tag(1) + nbits(1) + count(2 LE) + bits
-    — identical to codec.encode_values(..., codec='for')."""
+                            nbits: np.ndarray, lens: np.ndarray,
+                            tag: int = _TAG_FOR) -> list[bytes]:
+    """Per-block tagged byte strings: tag(1) + nbits(1) + count LE + bits —
+    identical to codec.encode_values (tag 1, 2-byte count) and, with
+    tag=_TAG_FOR32, to codec.encode_positions (4-byte count: Σtf can
+    exceed 65535)."""
     buf = pay.tobytes()
-    return [b"\x01" + bytes([int(nbits[i])])
-            + int(lens[i]).to_bytes(2, "little")
-            + buf[off[i]:off[i + 1]]
-            for i in range(len(nbits))]
-
-
-def _assemble_pos_bytes(pay: np.ndarray, off: np.ndarray, nbits: np.ndarray,
-                        tok_lens: np.ndarray) -> list[bytes]:
-    """Tag-2 (FOR32) per-block position payloads — identical layout to
-    codec.encode_positions (4-byte count: Σtf can exceed 65535)."""
-    buf = pay.tobytes()
-    return [b"\x02" + bytes([int(nbits[i])])
-            + int(tok_lens[i]).to_bytes(4, "little")
+    head, width = bytes([tag]), _COUNT_BYTES[tag]
+    return [head + bytes([int(nbits[i])])
+            + int(lens[i]).to_bytes(width, "little")
             + buf[off[i]:off[i + 1]]
             for i in range(len(nbits))]
 
@@ -311,8 +290,8 @@ def _factorize_spans(arr: np.ndarray, starts: np.ndarray, tok_len: np.ndarray,
 def build_shard_fast(shard: int, doc_ids: np.ndarray, texts,
                      cfg: IndexConfig, avgdl: float,
                      columns: list[str]) -> pd.DataFrame:
-    """One micro-shard → posting-block rows (fast path). Bit-identical
-    payloads to the generic build_shard with codec='for'."""
+    """One micro-shard → posting-block rows. Payloads are bit-identical to
+    codec.encode_blocks / encode_positions run term by term."""
     doc_ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
     tok_doc, codes, counts, terms = tokenize_shard_bytes(texts, cfg)
     if not len(codes):
@@ -346,7 +325,7 @@ def build_shard_fast(shard: int, doc_ids: np.ndarray, texts,
     d_bytes = _assemble_payload_bytes(*blk["payloads"][0], blk["block_lens"])
     t_bytes = _assemble_payload_bytes(*blk["payloads"][1], blk["block_lens"])
     l_bytes = _assemble_payload_bytes(*blk["payloads"][2], blk["block_lens"])
-    p_bytes = (_assemble_pos_bytes(*blk["pos_payload"])
+    p_bytes = (_assemble_payload_bytes(*blk["pos_payload"], tag=_TAG_FOR32)
                if blk["pos_payload"] is not None
                else [b""] * blk["n_blocks"])
     return pd.DataFrame({

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsutil
-from ..config import IndexConfig
+from ..config import IndexConfig, decode_config
 from . import manifest as mf
 from .codec import decode_block, encode_blocks
 
@@ -112,8 +112,7 @@ def _compact_mapper(cfg: IndexConfig, avgdl: float,
         # columns (partition col last), so pdf.columns must not be reused
         rows = []
         for bi, b in enumerate(encode_blocks(d, t, ln, avgdl, cfg.block_size,
-                                             cfg.k1, cfg.b,
-                                             cfg.posting_codec)):
+                                             cfg.k1, cfg.b)):
             s, e = bi * cfg.block_size, bi * cfg.block_size + b["n"]
             pb = (encode_positions(pp[ct[s]:ct[e]], t[s:e])
                   if has_pos else b"")
@@ -277,26 +276,22 @@ def merge_indexes(spark: SparkSession, input_dirs: list[str],
     recomputed from the avgdl-independent (max_tf, min_dl) metadata under
     the merged corpus avgdl — the exact trick streaming finalize uses.
 
-    Inputs must share analysis/scoring config (token_pattern, k1, b,
-    doc_bits) — asserted, since mixing dialects would corrupt scores."""
+    Inputs must share analysis/scoring config (k1, b, doc_bits,
+    min_token_len, stopwords) — asserted, since mixing dialects would corrupt scores."""
     from functools import reduce
 
     from pyspark.sql import DataFrame
 
-    from ..config import IndexConfig
     from .build import segment_metrics
 
     assert len(input_dirs) >= 1
     manifests = [mf.read_manifest(d) for d in input_dirs]
-    cfgs = [IndexConfig(**{k: (tuple(v) if k == "stopwords" else v)
-                           for k, v in m["config"].items()})
-            for m in manifests]
+    cfgs = [decode_config(m["config"]) for m in manifests]
     base = cfgs[0]
     for c in cfgs[1:]:
-        if (c.token_pattern, c.k1, c.b, c.doc_bits, c.min_token_len,
-                c.stopwords) != (base.token_pattern, base.k1, base.b,
-                                 base.doc_bits, base.min_token_len,
-                                 base.stopwords):
+        if (c.k1, c.b, c.doc_bits, c.min_token_len,
+                c.stopwords) != (base.k1, base.b, base.doc_bits,
+                                 base.min_token_len, base.stopwords):
             raise ValueError("indexes built with different analysis/scoring "
                              "config cannot be merged")
         if c.positions != base.positions:
@@ -416,12 +411,10 @@ def compact_final(spark: SparkSession, index_dir: str,
     no tombstones."""
     import dataclasses
 
-    from ..config import IndexConfig
     from .build import segment_metrics
 
     m = mf.read_manifest(index_dir)
-    cfg = IndexConfig(**{k: (tuple(v) if k == "stopwords" else v)
-                         for k, v in m["config"].items()})
+    cfg = decode_config(m["config"])
     if max_segments is not None:
         cfg = dataclasses.replace(cfg, max_segments=int(max_segments))
     final = m["levels"][-1]

@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..config import IndexConfig
+from ..config import decode_config
 from .codec import bm25_tfnorm, decode_block, tune_allocator
 from .manifest import read_manifest
 
@@ -100,7 +100,7 @@ def _check_kernel(avgdl: float, k1: float, b: float):
 
 def _doc_len_kernel():
     """Per-(shard, term) posting decode → (doc_id, tf) rows; summing tf per
-    doc across all terms reproduces the Python-tokenizer token count, which
+    doc across all terms reproduces the posting kernel's token count, which
     must equal the JVM-tokenizer doc_len stored in the docmap."""
     def per_doc(pdf: pd.DataFrame) -> pd.DataFrame:
         tune_allocator()
@@ -128,8 +128,7 @@ def validate_index(spark: SparkSession, index_dir: str,
     ensure_shipped(spark)
 
     m = read_manifest(index_dir)
-    cfg = IndexConfig(**{k: (tuple(v) if k == "stopwords" else v)
-                         for k, v in m["config"].items()})
+    cfg = decode_config(m["config"])
     avgdl = float(m["stats"]["avgdl"])
     final = m["levels"][-1]["path"]
 
@@ -145,7 +144,11 @@ def validate_index(spark: SparkSession, index_dir: str,
                                       "n_postings long, sum_tf long, "
                                       "errors string"))
     per_term = per_term.persist()
-    n_block_errors = per_term.where(F.col("errors") != "").count()
+    bad_terms = per_term.where(F.col("errors") != "")
+    n_block_errors = bad_terms.count()
+    block_errors = ([f"shard {r['shard_id']} term {r['term']!r}: {r['errors']}"
+                     for r in bad_terms.limit(5).collect()]
+                    if n_block_errors else [])
 
     # df / cf parity against term_stats (skipped under term sampling —
     # a sampled per_term can't reproduce global df/cf).
@@ -181,11 +184,11 @@ def validate_index(spark: SparkSession, index_dir: str,
     live_dup_keys = (live.groupBy("conv_id", "turn_idx").count()
                      .where(F.col("count") > 1).count())
 
-    # Tokenizer-dialect drift check: postings tokenize in Python
-    # (tokenize_pandas in the shard kernel) while docmap doc_len uses the JVM
-    # regexp — if the two dialects ever diverge (custom token_pattern,
-    # non-ASCII lowercasing), BM25 norms silently skew vs avgdl. Cross-check
-    # Σtf per doc from decoded postings against the docmap doc_len.
+    # Tokenizer-dialect drift check: postings are tokenized by fastbuild's
+    # byte tokenizer (a byte-class mask in the shard kernel) while docmap
+    # doc_len uses the JVM regexp — if the two ever diverge (e.g. non-ASCII
+    # lowercasing), BM25 norms silently skew vs avgdl. Cross-check Σtf per
+    # doc from decoded postings against the docmap doc_len.
     dl_mismatches = -1
     if not sample_terms:
         per_doc = (blocks.groupBy("shard_id", "term")
@@ -206,6 +209,7 @@ def validate_index(spark: SparkSession, index_dir: str,
     return {"ok": bool(ok),
             "n_terms_checked": int(n_terms_checked),
             "n_block_errors": int(n_block_errors),
+            "block_errors": block_errors,
             "df_cf_mismatches": int(mismatches),
             "doc_len_mismatches": int(dl_mismatches),
             "live_duplicate_keys": int(live_dup_keys),

@@ -53,7 +53,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import IndexConfig
+from ..config import IndexConfig, decode_config
 from ..index.codec import (bm25_tfnorm, decode_block, decode_positions,
                            tune_allocator)
 from ..index.manifest import read_manifest
@@ -75,8 +75,7 @@ class IndexHandle:
 
 def load_index(index_dir: str) -> IndexHandle:
     m = read_manifest(index_dir)
-    cfg = IndexConfig(**{k: (tuple(v) if k == "stopwords" else v)
-                         for k, v in m["config"].items()})
+    cfg = decode_config(m["config"])
     final = m["levels"][-1]
     tombs = m.get("tombstones")
     # The served level's shard ids come from the manifest, NOT cfg.shards:
@@ -571,8 +570,17 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
 def run_queries(spark: SparkSession, h: IndexHandle,
                 queries: list[dict]) -> DataFrame:
     """Batch top-k evaluation. Each query: {query_id, terms: [str], mode:
-    'AND'|'OR', k: int}. Returns (query_id, rank, doc_id, conv_id, turn_idx,
-    score) with rank 1..k ordered by (score desc, doc_id asc)."""
+    'AND'|'OR'|'PHRASE', k: int}. Returns (query_id, rank, doc_id, conv_id,
+    turn_idx, score) with rank 1..k ordered by (score desc, doc_id asc).
+
+    PHRASE matches docs holding the terms, in the given order, at
+    consecutive positions (Lucene PhraseQuery): tf is the phrase's
+    occurrence count and the weight is Σ idf over the phrase's terms.
+
+    Raises ValueError before any job runs if the batch has a PHRASE query
+    and the index was built without positions (IndexConfig.positions). A
+    phrase longer than 64 terms fails the query job when it runs (the shard
+    kernel raises ValueError)."""
     from ..session import ensure_shipped
     ensure_shipped(spark)
     cfg = h.cfg

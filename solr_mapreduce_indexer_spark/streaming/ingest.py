@@ -98,8 +98,7 @@ def append_batch(spark: SparkSession, df: DataFrame, cfg: IndexConfig,
 
     avgdl_batch = total_tokens / n_docs  # encoding-time bound only; finalize
     # recomputes bounds from (max_tf, min_dl) with the global avgdl.
-    postings = build_postings(docs, cfg, avgdl_batch, cfg.shards,
-                              pre_partitioned=True)
+    postings = build_postings(docs, cfg, avgdl_batch, cfg.shards)
     (postings.sortWithinPartitions("term", "first_doc")
              .write.mode("overwrite")
              .option("compression", cfg.intermediate_compression)

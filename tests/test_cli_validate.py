@@ -95,9 +95,12 @@ def test_validate_catches_corruption(spark, built, tmp_path):
     tbl = pq.read_table(part)
     payloads = tbl.column("tf_bytes").to_pylist()
     b = bytearray(payloads[0])
-    # flip the first tf's low bits, keeping the varint continuation bit —
-    # stream stays decodable but tf/max_tf/cf no longer match metadata
-    b[0] = (b[0] & 0x80) | ((b[0] + 1) & 0x7F)
+    # FOR layout: tag(1) nbits(1) count(2) then the packed bits, MSB-first
+    # per byte, values LSB-first — 0x80 of byte 4 is the first tf's low
+    # bit. Flipping it keeps the header (and so the stream) decodable, but
+    # tf/sum_tf/cf no longer match the block metadata.
+    assert b[0] == 1
+    b[4] ^= 0x80
     payloads[0] = bytes(b)
     i = tbl.schema.get_field_index("tf_bytes")
     tbl = tbl.set_column(i, tbl.schema.field(i),
@@ -108,7 +111,35 @@ def test_validate_catches_corruption(spark, built, tmp_path):
         os.remove(crc)  # stale Hadoop checksum sidecar from the original write
     report = validate_index(spark, bad)
     assert not report["ok"]
-    assert report["n_block_errors"] >= 1 or report["df_cf_mismatches"] >= 1
+    assert report["n_block_errors"] >= 1 and report["df_cf_mismatches"] >= 1
+    assert any("sum_tf mismatch" in e for e in report["block_errors"]), report
+    assert not any("decode failed" in e for e in report["block_errors"])
+
+
+def test_index_with_retired_config_keys_loads(spark, built, tmp_path):
+    """Manifests written before posting_codec/chunk_bits/token_pattern left
+    IndexConfig carry those keys; such an index loads and serves the same
+    results."""
+    import shutil
+
+    old = str(tmp_path / "old_idx")
+    shutil.copytree(built, old)
+    path = os.path.join(old, "manifest.json")
+    with open(path) as f:
+        m = json.load(f)
+    m["config"].update(posting_codec="for", chunk_bits=18,
+                       token_pattern="[a-z0-9]+")
+    with open(path, "w") as f:
+        json.dump(m, f)
+    terms = ["tok00000", "tok00003"]
+
+    def top(idx):
+        return [(r["doc_id"], r["score"]) for r in
+                bm25_topk(spark, load_index(idx), terms, k=10,
+                          mode="OR").collect()]
+
+    assert load_index(old).cfg == load_index(built).cfg
+    assert top(old) == top(built)
 
 
 def test_cli_dry_run_prints_docs(built, tmp_path, capsys):

@@ -4,24 +4,40 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from solr_mapreduce_indexer_spark.index.codec import (
-    bm25_tfnorm, decode_block, decode_doc_deltas, encode_blocks,
-    encode_doc_deltas, varint_decode, varint_encode)
+    bm25_tfnorm, decode_block, decode_doc_deltas, decode_values,
+    encode_blocks, encode_doc_deltas, encode_positions, encode_values,
+    varint_decode)
+
+
+def _leb128(vals) -> bytes:
+    """Independent LEB128 writer (the codec keeps only the varint reader)."""
+    out = bytearray()
+    for v in vals:
+        v = int(v)
+        while True:
+            byte, v = v & 0x7F, v >> 7
+            out.append(byte | (0x80 if v else 0))
+            if not v:
+                break
+    return bytes(out)
 
 
 def test_varint_known_values():
-    assert varint_encode(np.array([0])) == b"\x00"
-    assert varint_encode(np.array([1])) == b"\x01"
-    assert varint_encode(np.array([127])) == b"\x7f"
-    assert varint_encode(np.array([128])) == b"\x80\x01"
-    assert varint_encode(np.array([300])) == b"\xac\x02"
-    assert varint_encode(np.array([], dtype=np.int64)) == b""
+    assert varint_decode(b"\x00").tolist() == [0]
+    assert varint_decode(b"\x01").tolist() == [1]
+    assert varint_decode(b"\x7f").tolist() == [127]
+    assert varint_decode(b"\x80\x01").tolist() == [128]
+    assert varint_decode(b"\xac\x02").tolist() == [300]
+    assert varint_decode(b"").tolist() == []
+    assert varint_decode(b"\x00\x80\x01\xac\x02\x7f").tolist() == \
+        [0, 128, 300, 127]
+    assert varint_decode(_leb128([2**63 - 1])).tolist() == [2**63 - 1]
 
 
 @settings(max_examples=200, deadline=None)
 @given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=300))
-def test_varint_roundtrip(vals):
-    arr = np.array(vals, dtype=np.uint64)
-    assert np.array_equal(varint_decode(varint_encode(arr)), arr)
+def test_varint_decode_matches_reference_writer(vals):
+    assert varint_decode(_leb128(vals)).tolist() == vals
 
 
 @pytest.mark.parametrize("n", [0, 1, 127, 128, 129, 1000, 100_000])
@@ -76,35 +92,54 @@ def test_for_codec_roundtrip():
         assert (got == vals).all() and len(got) == len(vals)
 
 
-def test_tagged_payloads_mixed_codecs_decode():
-    """Blocks written with either codec (even mixed in one index) decode via
-    the same decode_block — the payload tag byte dispatches."""
-    import numpy as np
-    from solr_mapreduce_indexer_spark.index.codec import (
-        decode_block, encode_blocks)
+def _varint_block(d, t, dl) -> tuple[bytes, bytes, bytes]:
+    """Tag-0 (varint) payloads of one block, as indexes built with the
+    retired varint writer hold them: first doc delta 0, then gaps."""
+    deltas = np.diff(d, prepend=d[0])
+    return (b"\x00" + _leb128(deltas), b"\x00" + _leb128(t),
+            b"\x00" + _leb128(dl))
 
+
+def test_tagged_payloads_mixed_codecs_decode():
+    """Tag-0 (varint) and tag-1 (FOR) blocks, even mixed in one posting
+    list, decode via the same decode_block — the payload tag byte
+    dispatches."""
     rng = np.random.default_rng(1)
     docs = np.cumsum(rng.integers(1, 50, 200))
     tfs = rng.integers(1, 9, 200)
     dls = rng.integers(5, 80, 200)
-    for codec in ("for", "varint"):
-        blocks = encode_blocks(docs, tfs, dls, 30.0, block_size=64,
-                               codec=codec)
-        out_d, out_t, out_l = [], [], []
-        for b in blocks:
-            d, t, dl = decode_block(b["doc_bytes"], b["tf_bytes"],
-                                    b["len_bytes"], b["first_doc"])
-            out_d.append(d); out_t.append(t); out_l.append(dl)
-        assert (np.concatenate(out_d) == docs).all()
-        assert (np.concatenate(out_t) == tfs).all()
-        assert (np.concatenate(out_l) == dls).all()
+    for_blocks = encode_blocks(docs, tfs, dls, 30.0, block_size=64)
+    assert all(b["tf_bytes"][0] == 1 for b in for_blocks)
+    out_d, out_t, out_l = [], [], []
+    for i, b in enumerate(for_blocks):
+        s = i * 64
+        e = s + b["n"]
+        payloads = ((b["doc_bytes"], b["tf_bytes"], b["len_bytes"])
+                    if i % 2 else _varint_block(docs[s:e], tfs[s:e], dls[s:e]))
+        d, t, dl = decode_block(*payloads, b["first_doc"])
+        out_d.append(d); out_t.append(t); out_l.append(dl)
+    assert (np.concatenate(out_d) == docs).all()
+    assert (np.concatenate(out_t) == tfs).all()
+    assert (np.concatenate(out_l) == dls).all()
 
 
-def test_for_smaller_and_correct_on_typical_blocks():
-    import numpy as np
-    from solr_mapreduce_indexer_spark.index.codec import (
-        encode_values, varint_encode)
+def test_long_value_streams_use_tag2():
+    """Past the 2-byte count, encode_values switches to tag 2 — the same
+    bytes encode_positions writes for one position per posting."""
+    rng = np.random.default_rng(3)
+    short = rng.integers(0, 1000, 0xFFFF)
+    assert encode_values(short)[0] == 1
+    vals = rng.integers(0, 1000, 0xFFFF + 1)
+    buf = encode_values(vals)
+    assert buf[0] == 2
+    assert buf == encode_positions(vals, np.ones(len(vals), np.int64))
+    assert np.array_equal(decode_values(buf), vals)
 
-    rng = np.random.default_rng(2)
-    tfs = rng.geometric(0.6, 128).astype(np.uint64)
-    assert len(encode_values(tfs, "for")) < len(varint_encode(tfs)) + 1
+
+def test_unknown_tag_and_corrupt_header_raise():
+    good = encode_values(np.arange(10))
+    with pytest.raises(ValueError, match="tag"):
+        decode_values(b"\x07" + good[1:])
+    # tag flipped 1 → 2: the 2-byte-count payload read as a 4-byte count
+    with pytest.raises(ValueError, match="corrupt"):
+        decode_values(b"\x02" + good[1:])

@@ -1,10 +1,10 @@
 """Fast posting-build kernel vs an independent per-doc oracle.
 
 The oracle here re-derives postings the naive way (regex tokenize per doc,
-Counter tf, encode_blocks per term via the original codec path) and the
+Counter tf, encode_blocks per term via the per-block codec path) and the
 tests assert the vectorized kernel (index/fastbuild.py) produces the SAME
-rows with BYTE-IDENTICAL payloads — indexes written by either kernel must
-be interchangeable. No Spark needed: both sides are pure numpy/pandas.
+rows with BYTE-IDENTICAL payloads — compaction rewrites blocks with
+encode_blocks, so both writers must emit the same bytes. No Spark needed: both sides are pure numpy/pandas.
 """
 
 from __future__ import annotations
@@ -17,16 +17,17 @@ import pandas as pd
 import pytest
 
 from solr_mapreduce_indexer_spark.config import IndexConfig
+from solr_mapreduce_indexer_spark.functions.analysis import TOKEN_PATTERN
 from solr_mapreduce_indexer_spark.index.build import POSTINGS_COLS
 from solr_mapreduce_indexer_spark.index.codec import (
     decode_block, encode_blocks, encode_positions)
 from solr_mapreduce_indexer_spark.index.fastbuild import (
-    build_shard_fast, supports_fast_path, tokenize_shard_bytes)
+    build_shard_fast, tokenize_shard_bytes)
 
 
 def oracle_rows(shard, doc_ids, texts, cfg, avgdl):
     """Independent reference: per-doc regex tokenize + per-term encode."""
-    pat = re.compile(cfg.token_pattern)
+    pat = re.compile(TOKEN_PATTERN)
     stop = set(cfg.stopwords)
     per_doc = []
     for t in texts:
@@ -57,7 +58,7 @@ def oracle_rows(shard, doc_ids, texts, cfg, avgdl):
                 for p in pl_sorted]
         for bi, blk in enumerate(encode_blocks(d, t, dl, avgdl,
                                                cfg.block_size, cfg.k1,
-                                               cfg.b, codec="for")):
+                                               cfg.b)):
             if cfg.positions:
                 s = bi * cfg.block_size
                 e = s + blk["n"]
@@ -81,7 +82,6 @@ def _norm(df: pd.DataFrame) -> pd.DataFrame:
 
 def compare(texts, cfg=None, doc_base=7 << 40):
     cfg = cfg or IndexConfig()
-    assert supports_fast_path(cfg)
     doc_ids = np.arange(len(texts), dtype=np.int64) + doc_base
     avgdl = 11.3
     got = _norm(build_shard_fast(3, doc_ids, np.asarray(texts, object),
@@ -168,3 +168,19 @@ def test_empty_shard():
     out = build_shard_fast(0, np.empty(0, np.int64), np.asarray([], object),
                            cfg, 10.0, POSTINGS_COLS)
     assert len(out) == 0 and list(out.columns) == POSTINGS_COLS
+
+
+def test_largest_block_size_writes_and_decodes():
+    """block_size at its 65535 limit: a full block's count fills the FOR
+    header's 2-byte field and still decodes."""
+    n = 0xFFFF + 5
+    doc_ids = np.arange(n, dtype=np.int64)
+    out = build_shard_fast(0, doc_ids, np.asarray(["a"] * n, object),
+                           IndexConfig(block_size=0xFFFF), 1.0,
+                           POSTINGS_COLS)
+    assert out["n"].tolist() == [0xFFFF, 5]
+    r = out.iloc[0]
+    d, t, dl = decode_block(r["doc_bytes"], r["tf_bytes"], r["len_bytes"],
+                            int(r["first_doc"]))
+    assert np.array_equal(d, doc_ids[:0xFFFF])
+    assert (t == 1).all() and (dl == 1).all()

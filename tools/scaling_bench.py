@@ -132,8 +132,7 @@ n = prepared.count()  # untimed: materialize the cache, as build_index does
 out_base = {idx!r}
 
 def level0_once(out_path):
-    postings = build_postings(prepared, cfg, avgdl, {reducers},
-                              pre_partitioned=True)
+    postings = build_postings(prepared, cfg, avgdl, {reducers})
     (postings.write.mode("overwrite").option("compression", "snappy")
              .partitionBy("shard_id").parquet(out_path))
 
